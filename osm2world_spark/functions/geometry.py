@@ -93,6 +93,27 @@ def _ranges(counts: np.ndarray) -> np.ndarray:
     return idx - np.repeat(starts, counts)
 
 
+def _excl_cumsum(counts: np.ndarray) -> np.ndarray:
+    """Exclusive prefix sum: the start offset of each run in a flat layout."""
+    counts = np.asarray(counts, dtype=np.int64)
+    return np.cumsum(counts) - counts
+
+
+def _pair_combos(na: np.ndarray, nb: np.ndarray):
+    """Row-wise cross-product expansion: for row i with na[i] left items
+    and nb[i] right items (both stored contiguously row-major), returns
+    (comb_row, left_global_idx, right_global_idx)."""
+    na = np.asarray(na, dtype=np.int64)
+    nb = np.asarray(nb, dtype=np.int64)
+    m = na * nb
+    comb_row = np.repeat(np.arange(len(na), dtype=np.int64), m)
+    local = _ranges(m)
+    nb_r = nb[comb_row]
+    ii = _excl_cumsum(na)[comb_row] + local // nb_r
+    jj = _excl_cumsum(nb)[comb_row] + local % nb_r
+    return comb_row, ii, jj
+
+
 def flatten(geoms) -> FlatRings:
     """Flatten a pandas Series / list of geometries (list-of-rings, each a
     packed [x0,z0,...] array) into a FlatRings batch.

@@ -209,19 +209,6 @@ def tiles_for_bounds(zoom, minlat, minlon, maxlat, maxlon) -> Column:
     )
 
 
-def packed_tiles_for_bounds(zoom, minlat, minlon, maxlat, maxlon) -> Column:
-    """array<bigint> variant of tiles_for_bounds for shuffle keys."""
-    zoom = _lit(zoom)
-    x0, x1 = tile_x_at(minlon, zoom), tile_x_at(maxlon, zoom)
-    y0, y1 = tile_y_at(maxlat, zoom), tile_y_at(minlat, zoom)
-    return F.flatten(
-        F.transform(
-            F.sequence(x0, x1),
-            lambda x: F.transform(F.sequence(y0, y1), lambda y: pack_tile(zoom, x, y)),
-        )
-    )
-
-
 # --------------------------------------------------- TileBounds.around
 
 TILE_BOUNDS_SHRINK_DEG = 1e-5  # TileBounds.java:63-65

@@ -29,13 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import grid
+
 PAD = 50.0           # O2WConverterImpl.java:247 (bounds.pad(50))
 ROOF_TOL = 0.1       # O2WConverterImpl.java:276-282 tolerance band
-_OFF = 1 << 20
-
-
-def _pack_cell(cx, cz):
-    return F.shiftleft(cx + _OFF, 21) + (cz + _OFF)
 
 
 def nearest_attach(
@@ -63,27 +60,9 @@ def nearest_attach(
         F.col("y").alias("s_y"),
         F.col("z").alias("s_z"),
     )
-    s = s.withColumn(
-        "cell",
-        _pack_cell(
-            F.floor(F.col("s_x") / cell).cast("bigint"),
-            F.floor(F.col("s_z") / cell).cast("bigint"),
-        ),
-    )
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dz).alias("dz"))
-            for dx in (-1, 0, 1)
-            for dz in (-1, 0, 1)
-        ]
-    )
-    ccx = F.floor(F.col("x") / cell).cast("bigint")
-    ccz = F.floor(F.col("z") / cell).cast("bigint")
+    s = s.withColumn("cell", grid.point_key(F.col("s_x"), F.col("s_z"), cell))
     c = connectors.select("c_id", "x", "y", "z").withColumn(
-        "cell",
-        F.explode(
-            F.transform(offs, lambda o: _pack_cell(ccx + o["dx"].cast("bigint"), ccz + o["dz"].cast("bigint")))
-        ),
+        "cell", F.explode(grid.ring_cells(F.col("x"), F.col("z"), cell, 1))
     )
     j = c.join(s, "cell")
     dist_xz = F.sqrt((F.col("s_x") - F.col("x")) ** 2 + (F.col("s_z") - F.col("z")) ** 2)

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.geometry import _excl_cumsum, _pair_combos, _ranges
 from .triangulate import _bridge_hole, _ear_clip, _signed_area2
 
 
@@ -123,22 +124,11 @@ def intersection_pieces(a_geom, b_geom) -> tuple[float, float, float, list[np.nd
 # ------------------------------------------------------ flat pair kernel
 #
 # Batch-vectorized tri x tri clipping: ALL (triangle_of_A x triangle_of_B)
-# combos of an Arrow batch are clipped at once (the _pair_combos
-# row-expansion of the AA spatial-join kernel), 3 half-plane passes per
+# combos of an Arrow batch are clipped at once (geometry._pair_combos,
+# the row-expansion the AA spatial-join kernel uses), 3 half-plane passes per
 # clip since the clipper is a triangle. The scalar _clip_convex above is
 # retained as the semantics oracle (equivalence-tested in
 # tests/test_boolean.py).
-
-
-def _excl_cumsum(a: np.ndarray) -> np.ndarray:
-    out = np.cumsum(a)
-    return out - a
-
-
-def _flat_ranges(counts: np.ndarray) -> np.ndarray:
-    from ..functions.geometry import _ranges
-
-    return _ranges(counts)
 
 
 def _halfplane_pass(px, pz, starts, npts, eax, eaz, ebx, ebz):
@@ -179,20 +169,6 @@ def _halfplane_pass(px, pz, starts, npts, eax, eaz, ebx, ebz):
     out_z[ipos] = iz[cross]
     new_npts = np.bincount(poly_of, weights=emit, minlength=n_polys).astype(np.int64)
     return out_x, out_z, _excl_cumsum(new_npts), new_npts
-
-
-def _pair_combos(na: np.ndarray, nb: np.ndarray):
-    """Row-wise cross-product expansion (spatial_join._pair_combos)."""
-    n = len(na)
-    a_start = _excl_cumsum(na)
-    b_start = _excl_cumsum(nb)
-    m = na * nb
-    comb_row = np.repeat(np.arange(n, dtype=np.int64), m)
-    local = _flat_ranges(m)
-    nb_r = nb[comb_row]
-    ii = a_start[comb_row] + local // nb_r
-    jj = b_start[comb_row] + local % nb_r
-    return comb_row, ii, jj
 
 
 def _flat_shoelace(px, pz, starts, npts) -> np.ndarray:
@@ -308,8 +284,6 @@ ROUGHLY_SCHEMA = StructType(
 def _outer_vertices(flat):
     """(qx, qz, qrow) of every OUTER-ring vertex in a FlatRings batch,
     dropping the closing duplicate of closed rings. Fully vectorized."""
-    from ..functions.geometry import _ranges
-
     m = flat.ring_idx == 0
     starts, npts, rows = flat.ring_start[m], flat.ring_npts[m], flat.ring_row[m]
     closed = (

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import tiles as T
+from ..functions.geometry import _ranges
 
 
 def owner_tile(elements: DataFrame, zoom: int = 12) -> DataFrame:
@@ -231,18 +232,12 @@ def _sh_clip_rings_flat(px, pz, starts, npts, lo_x, lo_z, hi_x, hi_z):
     out_npts = k_npts + 1
     out_total = int(out_npts.sum())
     out_starts = np.concatenate(([0], np.cumsum(out_npts)[:-1]))
-    src = np.repeat(k_starts, out_npts) + _flat_ranges(out_npts)
+    src = np.repeat(k_starts, out_npts) + _ranges(out_npts)
     # the appended closing vertex reads the ring's first point
     last_slots = out_starts + out_npts - 1
     src_idx = src.copy()
     src_idx[last_slots] = k_starts
     return px[src_idx], pz[src_idx], out_starts, out_npts, keep
-
-
-def _flat_ranges(counts):
-    from ..functions.geometry import _ranges
-
-    return _ranges(counts)
 
 
 def _clip_polylines_flat(px, pz, starts, npts, lo_x, lo_z, hi_x, hi_z):
@@ -259,7 +254,7 @@ def _clip_polylines_flat(px, pz, starts, npts, lo_x, lo_z, hi_x, hi_z):
     if total_seg == 0:
         return empty
     seg_ring = np.repeat(np.arange(n_rings, dtype=np.int64), nseg)
-    first = np.repeat(starts, nseg) + _flat_ranges(nseg)
+    first = np.repeat(starts, nseg) + _ranges(nseg)
     x1, z1, x2, z2 = px[first], pz[first], px[first + 1], pz[first + 1]
     dx, dz = x2 - x1, z2 - z1
     rminx, rminz = lo_x[seg_ring], lo_z[seg_ring]
@@ -476,7 +471,7 @@ def _clip_batch(pdf: pd.DataFrame, origin) -> pd.DataFrame | None:
     order = np.lexsort((r_ord, r_row))
     r_row, r_ord, s_npts = r_row[order], r_ord[order], r_npts[order]
     cur_starts = np.concatenate(([0], np.cumsum(r_npts)[:-1]))
-    src = np.repeat(cur_starts[order], s_npts) + _flat_ranges(s_npts)
+    src = np.repeat(cur_starts[order], s_npts) + _ranges(s_npts)
     r_x, r_z = r_x[src], r_z[src]
     r_npts = s_npts
 

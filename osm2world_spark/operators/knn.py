@@ -33,26 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import grid
+
 KNN_CELL_SIZE = 50.0  # LeastSquaresInterpolator.java:24
 IDW_CUTOFF = 300.0    # InverseDistanceWeightingInterpolator.java:15
-_OFF = 1 << 20
-
-
-def _pack_cell(cx, cz):
-    return F.shiftleft(cx + _OFF, 21) + (cz + _OFF)
-
-
-def _cell_of(x, z, cell_size: float):
-    return (
-        F.floor(x / cell_size).cast("bigint"),
-        F.floor(z / cell_size).cast("bigint"),
-    )
-
-
-def _disk_offsets(r: int):
-    """Square-disk offsets (Chebyshev <= r), matching the reference's square
-    ring walk (i/j loops, LeastSquaresInterpolator.java:168-199)."""
-    return [(dx, dz) for dx in range(-r, r + 1) for dz in range(-r, r + 1)]
 
 
 def knn_join(
@@ -75,8 +59,7 @@ def knn_join(
         F.col("z").alias("s_z"),
         *(["y"] if has_y else []),
     )
-    scx, scz = _cell_of(F.col("s_x"), F.col("s_z"), cell_size)
-    sites_p = sites_p.withColumn("s_cell", _pack_cell(scx, scz))
+    sites_p = sites_p.withColumn("s_cell", grid.point_key(F.col("s_x"), F.col("s_z"), cell_size))
 
     remaining = queries.select(
         F.col("q_id"), F.col("x").alias("q_x"), F.col("z").alias("q_z")
@@ -141,13 +124,9 @@ def knn_join(
     n_rem = None
     while rounds < max_rounds and r < r_cover:
         rounds += 1
-        qcx, qcz = _cell_of(F.col("q_x"), F.col("q_z"), cell_size)
-        offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dz).alias("dz")) for dx, dz in _disk_offsets(r)])
         q_cells = remaining.select(
             "q_id", "q_x", "q_z",
-            F.explode(
-                F.transform(offs, lambda o: _pack_cell(qcx + o["dx"].cast("bigint"), qcz + o["dz"].cast("bigint")))
-            ).alias("s_cell"),
+            F.explode(grid.ring_cells(F.col("q_x"), F.col("q_z"), cell_size, r)).alias("s_cell"),
         )
         cand = q_cells.join(sites_p, "s_cell").select(
             "q_id", "q_x", "q_z", *s_cols
@@ -226,16 +205,10 @@ def idw_join(
     sites_p = sites.select(
         F.col("x").alias("s_x"), F.col("z").alias("s_z"), F.col("y").alias("s_y")
     )
-    scx, scz = _cell_of(F.col("s_x"), F.col("s_z"), cutoff)
-    sites_p = sites_p.withColumn("cell", _pack_cell(scx, scz))
-
-    qcx, qcz = _cell_of(F.col("x"), F.col("z"), cutoff)
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dz).alias("dz")) for dx, dz in _disk_offsets(1)])
+    sites_p = sites_p.withColumn("cell", grid.point_key(F.col("s_x"), F.col("s_z"), cutoff))
     q_cells = queries.select(
         "q_id", "x", "z",
-        F.explode(
-            F.transform(offs, lambda o: _pack_cell(qcx + o["dx"].cast("bigint"), qcz + o["dz"].cast("bigint")))
-        ).alias("cell"),
+        F.explode(grid.ring_cells(F.col("x"), F.col("z"), cutoff, 1)).alias("cell"),
     )
     dist = F.sqrt((F.col("s_x") - F.col("x")) ** 2 + (F.col("s_z") - F.col("z")) ** 2)
     weight = F.pow(F.col("dist"), -exponent)

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+from ..functions import grid
+
 BBOX_PAD = 100.0  # NaturalNeighborInterpolator.java:28
 
 
@@ -459,31 +461,9 @@ def natural_neighbor_interpolate(
         q = queries.select(F.lit(0).alias("g"), "q_id", "x", "z")
         s = sites.select(F.lit(0).alias("g"), "x", "z", "y")
     else:
-        gq = (
-            F.floor(F.col("x") / cell_size).cast("bigint") * 2_000_003
-            + F.floor(F.col("z") / cell_size).cast("bigint")
-        )
-        q = queries.select(gq.alias("g"), "q_id", "x", "z")
-        offs = [
-            (dx, dz) for dx in range(-halo, halo + 1) for dz in range(-halo, halo + 1)
-        ]
-        off_arr = F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dz).alias("dz"))
-                for dx, dz in offs
-            ]
-        )
+        q = queries.select(grid.point_key(F.col("x"), F.col("z"), cell_size).alias("g"), "q_id", "x", "z")
         s = sites.select(
-            F.explode(
-                F.transform(
-                    off_arr,
-                    lambda o: (
-                        (F.floor(F.col("x") / cell_size).cast("bigint") + o["dx"].cast("bigint"))
-                        * 2_000_003
-                        + (F.floor(F.col("z") / cell_size).cast("bigint") + o["dz"].cast("bigint"))
-                    ),
-                )
-            ).alias("g"),
+            F.explode(grid.ring_cells(F.col("x"), F.col("z"), cell_size, halo)).alias("g"),
             "x",
             "z",
             "y",

@@ -35,8 +35,8 @@ Scale/skew: dense urban cells get ADAPTIVE triangle-split salting — a
 cell with n elements is split into S ~ n/256 salt buckets, so every
 (i, j) salt-pair group is a bounded, independently schedulable unit of
 work regardless of density; the straggler cap that keeps wall-clock
-scaling with cores. (A join-based candidate generator with the same
-semantics, `candidate_pairs`, is kept for comparison/testing.)
+scaling with cores. The cell key and the bbox cover come from
+`functions/grid.py`, shared with the kNN, IDW and attachment joins.
 
 Output (the MapOverlap golden row format, map_data/data/overlaps/):
     a_id, a_type, b_id, b_type, overlap_kind in
@@ -58,6 +58,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions import grid
+from ..functions.geometry import _excl_cumsum, _pair_combos, _ranges
 from ..sources.documents import way_segments
 
 # Candidate-cell size. The reference's IndexGrid uses ~1000-unit cells
@@ -67,7 +69,6 @@ from ..sources.documents import way_segments
 # within-cell cross-product cost changes. 150 m fits building-scale
 # geometry: the dense-cluster n^2 term drops ~40x vs 1000 m.
 CELL_SIZE_M = 150.0
-_CELL_OFFSET = 1 << 20
 EPS_COMMON_NODE = 0.01  # OSMToMapDataConverter.java:676
 
 OVERLAPS_SCHEMA = StructType(
@@ -137,120 +138,6 @@ def join_surface(elements: DataFrame) -> DataFrame:
     return nodes.unionByName(segs).unionByName(areas)
 
 
-def metric_cells(minx, minz, maxx, maxz, cell_size: float = CELL_SIZE_M):
-    """array<bigint> of grid cells overlapped by a metric bbox (IndexGrid
-    insert semantics: all cells the bbox touches, IndexGrid.java:154-178)."""
-    cx0 = F.floor(minx / cell_size).cast("bigint")
-    cx1 = F.floor(maxx / cell_size).cast("bigint")
-    cz0 = F.floor(minz / cell_size).cast("bigint")
-    cz1 = F.floor(maxz / cell_size).cast("bigint")
-    return F.flatten(
-        F.transform(
-            F.sequence(cx0, cx1),
-            lambda cx: F.transform(
-                F.sequence(cz0, cz1),
-                lambda cz: F.shiftleft(cx + _CELL_OFFSET, 21) + (cz + _CELL_OFFSET),
-            ),
-        )
-    )
-
-
-def candidate_pairs(
-    surface: DataFrame,
-    cell_size: float = CELL_SIZE_M,
-    salt_buckets: int = 8,
-    dense_threshold: int = 4000,
-) -> DataFrame:
-    """Cell-cover explode + self-join on the cell key + pair dedup +
-    inclusive bbox prefilter. Inclusive (<=) because SHARE_SEGMENT pairs can
-    meet exactly on their bbox edges.
-
-    Skew ("dense urban cells"): besides AQE skew-split, cells holding more
-    than `dense_threshold` elements are TRIANGLE-SPLIT — each element gets a
-    salt s = hash(eid) % S; the self-join key becomes (cell, i, j) where the
-    left side replicates to tasks {(s, j) : j >= s} and the right side to
-    {(i, s) : i <= s}, so one quadratic cell becomes S*(S+1)/2 bounded
-    tasks. The dense-cell list is tiny and broadcast."""
-    covered = surface.withColumn(
-        "cell", F.explode(metric_cells(F.col("minx"), F.col("minz"), F.col("maxx"), F.col("maxz"), cell_size))
-    )
-
-    S = salt_buckets
-    dense = (
-        covered.groupBy("cell")
-        .agg(F.count("*").alias("n_in_cell"))
-        .where(F.col("n_in_cell") > dense_threshold)
-        .select("cell")
-    )
-    covered = covered.join(
-        F.broadcast(dense.withColumn("is_dense", F.lit(True))), "cell", "left"
-    ).withColumn(
-        "salt",
-        F.when(F.col("is_dense"), F.pmod(F.xxhash64("eid"), F.lit(S))).otherwise(F.lit(0)).cast("int"),
-    )
-    # left replicas: (salt, j) for j in salt..S-1 (non-dense: only (0, 0))
-    left = covered.withColumn(
-        "tj",
-        F.explode(
-            F.when(F.col("is_dense"), F.sequence(F.col("salt"), F.lit(S - 1))).otherwise(
-                F.array(F.lit(0))
-            )
-        ),
-    ).withColumn("ti", F.col("salt"))
-    # right replicas: (i, salt) for i in 0..salt
-    right = covered.withColumn(
-        "ti",
-        F.explode(
-            F.when(F.col("is_dense"), F.sequence(F.lit(0), F.col("salt"))).otherwise(
-                F.array(F.lit(0))
-            )
-        ),
-    ).withColumn("tj", F.col("salt"))
-
-    a = left.alias("a")
-    b = right.alias("b")
-    # Diagonal tasks (i == j) see each unordered pair on both sides, so
-    # eid< dedups there; an off-diagonal task sees the pair exactly once
-    # with ARBITRARY side order, so eid< would drop half the pairs —
-    # accept both orders there and canonicalize (swap to eid order) after.
-    cols = ("eid", "etype", "way_key", "seg_idx", "x1", "z1", "x2", "z2", "geom")
-    joined = a.join(
-        b,
-        on=[
-            F.col("a.cell") == F.col("b.cell"),
-            F.col("a.ti") == F.col("b.ti"),
-            F.col("a.tj") == F.col("b.tj"),
-            (F.col("a.ti") != F.col("a.tj")) | (F.col("a.eid") < F.col("b.eid")),
-            F.col("a.eid") != F.col("b.eid"),
-            F.col("a.minx") <= F.col("b.maxx"),
-            F.col("b.minx") <= F.col("a.maxx"),
-            F.col("a.minz") <= F.col("b.maxz"),
-            F.col("b.minz") <= F.col("a.maxz"),
-        ],
-    )
-    swap = F.col("a.eid") > F.col("b.eid")
-    exprs = []
-    for c in cols:
-        exprs.append(F.when(swap, F.col(f"b.{c}")).otherwise(F.col(f"a.{c}")).alias(f"a_{c}"))
-        exprs.append(F.when(swap, F.col(f"a.{c}")).otherwise(F.col(f"b.{c}")).alias(f"b_{c}"))
-    return joined.select(*exprs).dropDuplicates(["a_eid", "b_eid"])
-
-
-def _oriented(pairs: DataFrame) -> DataFrame:
-    """Normalize pair orientation to (node < segment < area) so each
-    refinement kernel sees a fixed argument order."""
-    rank = {"node": 0, "segment": 1, "area": 2}
-    rk = F.create_map(*[x for kv in rank.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
-    swap = rk[F.col("a_etype")] > rk[F.col("b_etype")]
-    cols = ("eid", "etype", "way_key", "seg_idx", "x1", "z1", "x2", "z2", "geom")
-    out = pairs
-    exprs = []
-    for c in cols:
-        exprs.append(F.when(swap, F.col(f"b_{c}")).otherwise(F.col(f"a_{c}")).alias(f"a_{c}"))
-        exprs.append(F.when(swap, F.col(f"a_{c}")).otherwise(F.col(f"b_{c}")).alias(f"b_{c}"))
-    return out.select(*exprs)
-
-
 # ------------------------------------------------------------- refinement
 #
 # All four type-pair refinements run in ONE mapInPandas pass over the
@@ -259,28 +146,6 @@ def _oriented(pairs: DataFrame) -> DataFrame:
 # vectorized numpy kernel per combination. No per-row Python loops on the
 # hot path — Python-level iteration only builds the (small) INTERSECT
 # position payload lists.
-
-
-def _excl_cumsum(counts: np.ndarray) -> np.ndarray:
-    return np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64)
-
-
-def _pair_combos(na: np.ndarray, nb: np.ndarray):
-    """Row-wise cross-product expansion: for row i with na[i] left items
-    and nb[i] right items (both stored contiguously row-major), returns
-    (comb_row, left_global_idx, right_global_idx)."""
-    from ..functions.geometry import _ranges
-
-    n = len(na)
-    a_start = _excl_cumsum(na)
-    b_start = _excl_cumsum(nb)
-    m = na * nb
-    comb_row = np.repeat(np.arange(n, dtype=np.int64), m)
-    local = _ranges(m)
-    nb_r = nb[comb_row]
-    ii = a_start[comb_row] + local // nb_r
-    jj = b_start[comb_row] + local % nb_r
-    return comb_row, ii, jj
 
 
 def _out_frame(a_ids, a_type, b_ids, b_type, kinds, positions) -> pd.DataFrame:
@@ -484,8 +349,6 @@ def _vertex_rule_contains(f_c, f_o, row_mask: np.ndarray) -> np.ndarray:
     ox, oz, orow = f_c.px[c_outer], f_c.pz[c_outer], c_pt_row[c_outer]
     n_c_pts = np.bincount(orow, minlength=n)
     c_start = _excl_cumsum(n_c_pts)
-    from ..functions.geometry import _ranges
-
     mq = n_c_pts[qrow]
     comb_q = np.repeat(np.arange(len(qx), dtype=np.int64), mq)
     comb_c = c_start[qrow[comb_q]] + _ranges(mq)
@@ -563,8 +426,6 @@ def _aa_rows(pdf: pd.DataFrame) -> pd.DataFrame | None:
             np.logical_or.at(intersect, hrow[no_cn], True)
         sel = ~no_cn
         if sel.any():
-            from ..functions.geometry import _ranges
-
             h2row, h2x, h2z = hrow[sel], hx[sel], hz[sel]
             cn_start = _excl_cumsum(n_cn)
             mh = n_cn[h2row]
@@ -682,8 +543,8 @@ _PAIR_BLOCK = 65_536
 # quadratically again). Memory bound: a dense cell replicates each element
 # S times (n * S slim rows ~ n^2 / _TARGET_SIDE), the price of making the
 # quadratic work independently schedulable. The cap also sizes the gkey
-# packing: cell ids use 42 bits (metric_cells), so gi/gj strides of 2^10
-# each keep gkey = cell * _MAX_SALT^2 + gi * _MAX_SALT + gj inside int64.
+# packing: cell keys use 42 bits (functions/grid.py), so gi/gj strides of
+# 2^10 each keep gkey = cell * _MAX_SALT^2 + gi * _MAX_SALT + gj inside int64.
 _TARGET_SIDE = 256
 _MAX_SALT = 1024
 
@@ -704,14 +565,13 @@ def _dense_cells(covered: DataFrame, threshold: int) -> DataFrame:
 def _grouped_surface(
     surface: DataFrame,
     cell_size: float,
-    salt_buckets: int,
     dense_threshold: int,
 ) -> DataFrame:
     """surface -> cell-cover explode -> salted group keys, hash-partitioned
     and sorted by group so each group is contiguous within its partition."""
     covered = surface.withColumn(
         "cell",
-        F.explode(metric_cells(F.col("minx"), F.col("minz"), F.col("maxx"), F.col("maxz"), cell_size)),
+        F.explode(grid.bbox_cells(F.col("minx"), F.col("minz"), F.col("maxx"), F.col("maxz"), cell_size)),
     )
     covered = covered.join(F.broadcast(_dense_cells(covered, dense_threshold)), "cell", "left")
     covered = covered.withColumn("s_cell", F.coalesce(F.col("s_cell"), F.lit(1)))
@@ -750,8 +610,7 @@ def _grouped_surface(
     )
 
 
-def _emit_group_pairs(pdf: pd.DataFrame, cell_size: float, salt_buckets: int,
-                      pair_block: int = _PAIR_BLOCK):
+def _emit_group_pairs(pdf: pd.DataFrame, cell_size: float, pair_block: int = _PAIR_BLOCK):
     """Vectorized pair generation for a frame of WHOLE groups (sorted by
     (gkey, eid)). Diagonal groups (gi == gj) expand TRIANGULAR combos
     directly — row order within a group is eid order, so each unordered
@@ -765,8 +624,6 @@ def _emit_group_pairs(pdf: pd.DataFrame, cell_size: float, salt_buckets: int,
     filters BEFORE the ~20-column pair frame materializes, so peak memory
     on a dense-cell frame is bounded by pair_block wide rows plus slim int
     arrays — not the full cartesian expansion."""
-    from ..functions.geometry import _ranges
-
     n = len(pdf)
     if n == 0:
         return
@@ -803,14 +660,9 @@ def _emit_group_pairs(pdf: pd.DataFrame, cell_size: float, salt_buckets: int,
             ng = len(starts)
             nl = np.bincount(grp_of_row[l_rows], minlength=ng)
             nr = np.bincount(grp_of_row[r_rows], minlength=ng)
-            m = nl * nr
-            comb_g = np.repeat(np.arange(ng, dtype=np.int64), m)
-            loc = _ranges(m)
-            l_start = np.concatenate([[0], np.cumsum(nl)[:-1]])
-            r_start = np.concatenate([[0], np.cumsum(nr)[:-1]])
-            nr_g = nr[comb_g]
-            ii_parts.append(l_rows[l_start[comb_g] + loc // nr_g])
-            jj_parts.append(r_rows[r_start[comb_g] + loc % nr_g])
+            _, li, ri = _pair_combos(nl, nr)
+            ii_parts.append(l_rows[li])
+            jj_parts.append(r_rows[ri])
 
     if not ii_parts:
         return
@@ -829,9 +681,9 @@ def _emit_group_pairs(pdf: pd.DataFrame, cell_size: float, salt_buckets: int,
     # reference-point dedup: the pair belongs to the cell holding the
     # lower corner of the bbox intersection
     cell = pdf["cell"].to_numpy(np.int64)[ii]
-    rcx = np.floor(np.maximum(minx[ii], minx[jj]) / cell_size).astype(np.int64)
-    rcz = np.floor(np.maximum(minz[ii], minz[jj]) / cell_size).astype(np.int64)
-    own = (((rcx + _CELL_OFFSET) << 21) + (rcz + _CELL_OFFSET)) == cell
+    rx = np.maximum(minx[ii], minx[jj])
+    rz = np.maximum(minz[ii], minz[jj])
+    own = grid.point_key_np(rx, rz, cell_size) == cell
     if not own.any():
         return
     ii, jj = ii[own], jj[own]
@@ -859,7 +711,7 @@ def _emit_group_pairs(pdf: pd.DataFrame, cell_size: float, salt_buckets: int,
         yield pd.DataFrame(cols)
 
 
-def _cell_join_kernel(cell_size: float, salt_buckets: int, pair_block: int = _PAIR_BLOCK):
+def _cell_join_kernel(cell_size: float, pair_block: int = _PAIR_BLOCK):
     def kernel(batches):
         carry = None
         for pdf in batches:
@@ -873,11 +725,11 @@ def _cell_join_kernel(cell_size: float, salt_buckets: int, pair_block: int = _PA
             cut = int(np.searchsorted(gk, last, side="left"))
             carry = pdf.iloc[cut:]
             ready = pdf.iloc[:cut]
-            for pairs in _emit_group_pairs(ready, cell_size, salt_buckets, pair_block):
+            for pairs in _emit_group_pairs(ready, cell_size, pair_block):
                 if len(pairs):
                     yield from _refine_kernel([pairs])
         if carry is not None and len(carry):
-            for pairs in _emit_group_pairs(carry, cell_size, salt_buckets, pair_block):
+            for pairs in _emit_group_pairs(carry, cell_size, pair_block):
                 if len(pairs):
                     yield from _refine_kernel([pairs])
 
@@ -889,7 +741,6 @@ def _cell_join_kernel(cell_size: float, salt_buckets: int, pair_block: int = _PA
 def spatial_self_join(
     elements: DataFrame,
     cell_size: float = CELL_SIZE_M,
-    salt_buckets: int = 8,
     dense_threshold: int = 768,
     pair_block: int = _PAIR_BLOCK,
 ) -> DataFrame:
@@ -901,7 +752,7 @@ def spatial_self_join(
     only wide exchange is the covered surface itself; pairs never hit the
     shuffle."""
     surface = join_surface(elements)
-    grouped = _grouped_surface(surface, cell_size, salt_buckets, dense_threshold)
+    grouped = _grouped_surface(surface, cell_size, dense_threshold)
     return grouped.mapInPandas(
-        _cell_join_kernel(cell_size, salt_buckets, pair_block), schema=OVERLAPS_SCHEMA
+        _cell_join_kernel(cell_size, pair_block), schema=OVERLAPS_SCHEMA
     )

@@ -97,18 +97,3 @@ def assign_tiles(elements: DataFrame, zooms: tuple[int, ...] = (GOLDEN_ZOOM, CEL
         F.col("t.y").alias("tile_y"),
         *cell_cols,
     )
-
-
-def cell_cover(elements: DataFrame, zoom: int = CELL_ZOOM) -> DataFrame:
-    """elements + packed cell key, one row per overlapped z`zoom` tile —
-    the candidate-generation fan-out for the spatial self-join
-    (IndexGrid.insert semantics, IndexGrid.java:154-178). Keeps all element
-    payload columns."""
-    return elements.withColumn(
-        "cell",
-        F.explode(
-            T.packed_tiles_for_bounds(
-                zoom, F.col("minlat"), F.col("minlon"), F.col("maxlat"), F.col("maxlon")
-            )
-        ),
-    )

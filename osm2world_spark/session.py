@@ -28,18 +28,38 @@ def _ensure_package_on_worker_path() -> None:
         os.environ["PYTHONPATH"] = os.pathsep.join([pkg_parent] + [p for p in parts if p])
 
 
+def _submitted_master() -> str | None:
+    """The master spark-submit was given, when this driver runs under it.
+    spark-submit starts the JVM first and hands Python its gateway
+    (PYSPARK_GATEWAY_PORT), so the master already sits in the JVM's conf,
+    where builder.master() would override it."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
+
+
 def get_spark(
     app_name: str = "osm2world_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's session. `master=None` keeps the master spark-submit
+    was given, else runs local[$SPARK_GRAFT_CPUS or 32]."""
     _ensure_package_on_worker_path()
-    if os.path.isdir("/dev/shm"):
-        os.makedirs("/dev/shm/spark-tmp", exist_ok=True)
+    # shuffle/spill on tmpfs when available: a slow shared disk becomes a
+    # serial bottleneck for shuffle-heavy stages; a real cluster uses
+    # local NVMe via spark.local.dir
+    local_dir = (extra_conf or {}).get("spark.local.dir") or (
+        "/dev/shm/spark-tmp" if os.path.isdir("/dev/shm") else "/tmp"
+    )
+    os.makedirs(local_dir, exist_ok=True)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
-        master = f"local[{cpus}]"
+        master = _submitted_master() or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] -> N; a real cluster wants 2-3x total cores instead.
         n = master[len("local[") : -1] if master.startswith("local[") else ""
@@ -55,10 +75,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # shuffle/spill on tmpfs when available: the sandbox VM's disk is
-        # slow+shared and becomes a serial bottleneck for shuffle-heavy
-        # stages; a real cluster uses local NVMe via spark.local.dir
-        .config("spark.local.dir", "/dev/shm/spark-tmp" if os.path.isdir("/dev/shm") else "/tmp")
+        .config("spark.local.dir", local_dir)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

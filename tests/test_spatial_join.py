@@ -118,23 +118,23 @@ def test_synthetic_smoke(spark):
 
 
 def test_salting_preserves_results(spark):
-    """Triangle-split salting of dense cells must not change the pair set:
-    run with salting forced on every cell vs effectively off."""
-    from osm2world_spark.operators.spatial_join import (
-        _oriented,
-        candidate_pairs,
-        join_surface,
-    )
-    from osm2world_spark.sources.documents import extract_elements, synthetic_documents
-
+    """Triangle-split salting of dense cells must not change the overlaps:
+    the production join with salting forced on every cell vs effectively
+    off."""
     docs = synthetic_documents(spark, 300, seed=11)
-    surface = join_surface(extract_elements(docs)).cache()
-    plain = candidate_pairs(surface, dense_threshold=10**9)
-    salted = candidate_pairs(surface, salt_buckets=4, dense_threshold=1)
-    p = sorted((r.a_eid, r.b_eid) for r in plain.select("a_eid", "b_eid").collect())
-    s = sorted((r.a_eid, r.b_eid) for r in salted.select("a_eid", "b_eid").collect())
-    assert p == s
-    surface.unpersist()
+    elements = extract_elements(docs).cache()
+
+    def rows(dense_threshold):
+        out = spatial_self_join(elements, dense_threshold=dense_threshold)
+        return sorted(
+            (r.a_id, r.b_id, r.overlap_kind, tuple((p.x, p.z) for p in r.positions))
+            for r in out.collect()
+        )
+
+    salted = rows(1)
+    plain = rows(10**9)
+    assert plain and salted == plain
+    elements.unpersist()
 
 
 def test_aa_contain_wins_over_intersect():
@@ -233,7 +233,7 @@ def test_dense_cell_salting_bounds_group_pairs(spark):
             "maxx": F.col("x1") + 0.5, "maxz": F.col("z1") + 0.5,
         }
     )
-    grouped = _grouped_surface(base, cell_size=150.0, salt_buckets=8, dense_threshold=4000)
+    grouped = _grouped_surface(base, cell_size=150.0, dense_threshold=4000)
     stats = (
         grouped.groupBy("gkey", "gi", "gj")
         .agg(
