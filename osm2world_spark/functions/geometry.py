@@ -240,7 +240,7 @@ def contains_points_multi(
         return np.zeros(nq, dtype=bool)
     # edges are emitted grouped by row (ring_row is nondecreasing)
     n_edges_row = np.bincount(edge_row, minlength=flat.n_rows)
-    edge_start_row = np.concatenate([[0], np.cumsum(n_edges_row)[:-1]])
+    edge_start_row = _excl_cumsum(n_edges_row)
     m = n_edges_row[qrow]
     comb_q = np.repeat(np.arange(nq, dtype=np.int64), m)
     comb_e = edge_start_row[qrow[comb_q]] + _ranges(m)
@@ -391,7 +391,7 @@ def ring_is_self_intersecting(flat: FlatRings) -> np.ndarray:
     order = np.argsort(edge_ring, kind="stable")
     x1, z1, x2, z2, edge_ring = (a[order] for a in (x1, z1, x2, z2, edge_ring))
     counts = np.bincount(edge_ring, minlength=flat.n_rings)
-    starts = np.cumsum(counts) - counts
+    starts = _excl_cumsum(counts)
     for n in np.unique(counts):
         if n < 4:
             continue  # triangle edges can't truly self-intersect

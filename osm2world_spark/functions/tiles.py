@@ -261,6 +261,17 @@ def py_tiles_for_bounds(zoom: int, minlat: float, minlon: float, maxlat: float, 
     return [(x, y) for x in range(x0, x1 + 1) for y in range(y0, y1 + 1)]
 
 
+def py_pack_tile(zoom: int, x: int, y: int) -> int:
+    """Scalar twin of pack_tile."""
+    return (zoom << 58) + (x << 29) + y
+
+
+def py_unpack_tile(packed: int) -> tuple[int, int, int]:
+    """Scalar twin of unpack_tile: (zoom, x, y)."""
+    mask = (1 << 29) - 1
+    return packed >> 58, (packed >> 29) & mask, packed & mask
+
+
 def py_validate_tile(zoom: int, x: int, y: int) -> None:
     """Raises ValueError for invalid tile numbers (TileNumber.java:75-85)."""
     if zoom < 0:

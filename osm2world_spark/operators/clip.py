@@ -38,7 +38,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import tiles as T
-from ..functions.geometry import _ranges
+from ..functions.geometry import _excl_cumsum, _ranges
 
 
 def owner_tile(elements: DataFrame, zoom: int = 12) -> DataFrame:
@@ -156,7 +156,7 @@ def _drop_closing_vertex(px, pz, starts, npts):
     new_npts = npts - closed.astype(np.int64)
     keep = np.ones(len(px), dtype=bool)
     keep[last[closed]] = False
-    new_starts = np.concatenate(([0], np.cumsum(new_npts)[:-1]))
+    new_starts = _excl_cumsum(new_npts)
     return px[keep], pz[keep], new_starts, new_npts
 
 
@@ -202,7 +202,7 @@ def _sh_pass(px, pz, starts, npts, lo_x, hi_x, lo_z, hi_z, side):
     cross = inside != in_nxt
     emit = inside.astype(np.int64) + cross.astype(np.int64)
     out_total = int(emit.sum())
-    pos = np.cumsum(emit) - emit  # output slot of each edge's first emission
+    pos = _excl_cumsum(emit)  # output slot of each edge's first emission
 
     out_x = np.empty(out_total, dtype=np.float64)
     out_z = np.empty(out_total, dtype=np.float64)
@@ -213,7 +213,7 @@ def _sh_pass(px, pz, starts, npts, lo_x, hi_x, lo_z, hi_z, side):
     out_z[ipos] = iz[cross]
 
     new_npts = np.bincount(ring_of, weights=emit, minlength=n_rings).astype(np.int64)
-    new_starts = np.concatenate(([0], np.cumsum(new_npts)[:-1]))
+    new_starts = _excl_cumsum(new_npts)
     return out_x, out_z, new_starts, new_npts
 
 
@@ -231,7 +231,7 @@ def _sh_clip_rings_flat(px, pz, starts, npts, lo_x, lo_z, hi_x, hi_z):
     k_npts = npts[keep]
     out_npts = k_npts + 1
     out_total = int(out_npts.sum())
-    out_starts = np.concatenate(([0], np.cumsum(out_npts)[:-1]))
+    out_starts = _excl_cumsum(out_npts)
     src = np.repeat(k_starts, out_npts) + _ranges(out_npts)
     # the appended closing vertex reads the ring's first point
     last_slots = out_starts + out_npts - 1
@@ -313,7 +313,7 @@ def _clip_polylines_flat(px, pz, starts, npts, lo_x, lo_z, hi_x, hi_z):
     n_pieces = int(piece_id[-1]) + 1
     # each valid segment emits its b point; each piece head also emits a
     emit = 1 + new_piece.astype(np.int64)
-    pos = np.cumsum(emit) - emit
+    pos = _excl_cumsum(emit)
     out_total = int(emit.sum())
     out_x = np.empty(out_total)
     out_z = np.empty(out_total)
@@ -322,7 +322,7 @@ def _clip_polylines_flat(px, pz, starts, npts, lo_x, lo_z, hi_x, hi_z):
     out_x[pos + new_piece.astype(np.int64)] = v_bx
     out_z[pos + new_piece.astype(np.int64)] = v_bz
     piece_npts = np.bincount(piece_id, weights=emit, minlength=n_pieces).astype(np.int64)
-    piece_starts = np.concatenate(([0], np.cumsum(piece_npts)[:-1]))
+    piece_starts = _excl_cumsum(piece_npts)
     piece_ring = v_ring[new_piece]
     return out_x, out_z, piece_starts, piece_npts, piece_ring
 
@@ -383,8 +383,7 @@ def _subset_flat(flat, ring_mask):
     point_mask = np.repeat(ring_mask, flat.ring_npts)
     px = flat.px[point_mask]
     pz = flat.pz[point_mask]
-    starts = np.concatenate(([0], np.cumsum(npts)[:-1])) if len(npts) else np.empty(0, np.int64)
-    return px, pz, starts.astype(np.int64), npts, np.nonzero(ring_mask)[0]
+    return px, pz, _excl_cumsum(npts), npts, np.nonzero(ring_mask)[0]
 
 
 def _clip_batch(pdf: pd.DataFrame, origin) -> pd.DataFrame | None:
@@ -470,7 +469,7 @@ def _clip_batch(pdf: pd.DataFrame, origin) -> pd.DataFrame | None:
     # stable sort rings by (row, ring order); pieces keep emission order
     order = np.lexsort((r_ord, r_row))
     r_row, r_ord, s_npts = r_row[order], r_ord[order], r_npts[order]
-    cur_starts = np.concatenate(([0], np.cumsum(r_npts)[:-1]))
+    cur_starts = _excl_cumsum(r_npts)
     src = np.repeat(cur_starts[order], s_npts) + _ranges(s_npts)
     r_x, r_z = r_x[src], r_z[src]
     r_npts = s_npts

@@ -14,13 +14,16 @@ Spark shape:
 - stage outputs are parquet directories partitioned by the golden z12 tile
   (tile_z12 = packed bigint), written with DYNAMIC PARTITION OVERWRITE so a
   re-run of a tile is idempotent (recompute overwrites, never duplicates)
-- the `_commits` manifest (one parquet dir) records (stage, tile_z12) after
-  the stage's data is durably written; on restart, committed tiles are
-  ANTI-JOINED away before any work happens — the reference's skip-existing
-  semantics, but transactional: data first, then commit, so a kill between
-  the two only ever causes recompute, never loss or duplication
-- `_lineage` records (stage, tile_z12, rows_out, wall_ms, run_ts) per stage
-  run plus parse-error quarantine counts (FaultTolerantIterationUtil
+- the `_commits` manifest (one parquet dir) records (stage, tile_z12) for
+  every tile a stage processed, empty or not, once its data is durably
+  written; on restart, each stage reads it once and drops its committed
+  tiles before any work happens (with none left, it does nothing) — the
+  reference's skip-existing semantics, but transactional: data first, then
+  commit, so a kill between the two only ever causes recompute, never loss
+  or duplication
+- `_lineage` records (stage, tile_z12, rows_out, errors, wall_ms, run_ts)
+  for each tile that got rows in a stage run, counted from this run's
+  write, plus parse-error quarantine counts (FaultTolerantIterationUtil
   analogue: bad rows become lineage, not job aborts)
 
 At cluster scale the stage writes are Iceberg tables with identity
@@ -32,7 +35,9 @@ from __future__ import annotations
 
 import os
 import time
+from functools import reduce
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -120,6 +125,39 @@ def _tile_z12_col():
     )
 
 
+def _neighborhood(tiles) -> set[int]:
+    """The z12 tiles of the 3x3 block around each packed tile of `tiles`."""
+    out = set()
+    for t in tiles:
+        zoom, x, y = T.py_unpack_tile(t)
+        out.update(T.py_pack_tile(zoom, x + dx, y + dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+    return out
+
+
+def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet directory at `path`, or None while nothing is written
+    there: the directory is missing, or holds no data file yet (a first
+    write killed before its committer published any). Every other read
+    error propagates."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
+def _manifest_rows(spark: SparkSession, columns: dict) -> DataFrame:
+    """Driver-side manifest rows as a one-partition DataFrame (one file per
+    append). Built from pandas, it is a LocalRelation: no Python worker
+    runs to evaluate it."""
+    import pandas as pd
+
+    types = {"stage": "string", "tile_z12": "bigint", "rows_out": "bigint"}
+    schema = ", ".join(f"{c} {types[c]}" for c in columns)
+    return spark.createDataFrame(pd.DataFrame(columns), schema).coalesce(1)
+
+
 class TilePipeline:
     """Resumable docs -> {tile_assignments, overlaps} pipeline.
 
@@ -189,58 +227,40 @@ class TilePipeline:
             )
         return out
 
-    def _at_sea_tiles(self) -> DataFrame | None:
-        if self.tile_metadata is None:
-            return None
-        return self.tile_metadata.where(F.col("land") == False).select("tile_z12")  # noqa: E712
-
     # ---------------------------------------------------------- manifest
 
     def _commits_path(self) -> str:
         return os.path.join(self.out_dir, "_commits")
 
-    def committed_tiles(self, stage: str, run_ts: str | None = None) -> DataFrame:
-        """tile_z12 values already committed for `stage` (empty DF if none).
-        In scoped (streaming) mode only commits from the SAME run_ts count:
-        a replayed micro-batch is skipped, a new one is not."""
-        path = self._commits_path()
-        try:
-            c = self.spark.read.parquet(path)
-        except Exception:
-            return self.spark.createDataFrame([], "tile_z12 bigint")
+    def committed_tiles(self, stage: str, run_ts: str | None = None) -> set[int]:
+        """tile_z12 values already committed for `stage` (none before the
+        manifest exists). In scoped (streaming) mode only commits from the
+        SAME run_ts count: a replayed micro-batch is skipped, a new one is
+        not."""
+        c = _read_if_exists(self.spark, self._commits_path())
+        if c is None:
+            return set()
         c = c.where(F.col("stage") == stage)
         if self.scoped and run_ts is not None:
             c = c.where(F.col("ts") == run_ts)
         # a tile is committed iff its 'done' rows outnumber its
         # 'invalidated' retractions (the manifest is append-only; each
         # invalidate/recompute cycle adds one row of each kind)
-        return (
+        c = (
             c.groupBy("tile_z12")
             .agg(
                 F.sum(F.when(F.col("status") == "done", 1).otherwise(0)).alias("_d"),
                 F.sum(F.when(F.col("status") == "invalidated", 1).otherwise(0)).alias("_i"),
             )
             .where(F.col("_d") > F.col("_i"))
-            .select("tile_z12")
         )
+        return {r.tile_z12 for r in c.select("tile_z12").collect()}
 
-    def _commit(self, stage: str, tiles: DataFrame, run_ts: str) -> None:
-        tiles.select(
-            F.lit(stage).alias("stage"),
-            F.col("tile_z12"),
-            F.lit("done").alias("status"),
-            F.lit(run_ts).alias("ts"),
+    def _append_commits(self, rows: DataFrame, status: str, ts: str) -> None:
+        """Append one manifest row per (stage, tile_z12) row of `rows`."""
+        rows.select(
+            "stage", "tile_z12", F.lit(status).alias("status"), F.lit(ts).alias("ts")
         ).write.mode("append").parquet(self._commits_path())
-
-    def _lineage(self, stage: str, counts: DataFrame, wall_ms: int, run_ts: str, errors: int = 0) -> None:
-        counts.select(
-            F.lit(stage).alias("stage"),
-            F.col("tile_z12"),
-            F.col("rows_out"),
-            F.lit(errors).cast("bigint").alias("errors"),
-            F.lit(wall_ms).cast("bigint").alias("wall_ms"),
-            F.lit(run_ts).alias("run_ts"),
-        ).write.mode("append").parquet(os.path.join(self.out_dir, "_lineage"))
 
     def invalidate(
         self,
@@ -267,8 +287,10 @@ class TilePipeline:
         deployment this is a partition-level DELETE; here it is the
         parquet-directory equivalent.)
 
-        Returns the affected (stage, tile_z12) rows (also appended to the
-        manifest with status='invalidated')."""
+        Returns the retracted (stage, tile_z12) rows, also appended to the
+        manifest with status='invalidated'. Each stage's retracted tiles are
+        collected once, and the manifest rows, the partition purge and the
+        returned rows are all built from that list."""
         import shutil
 
         spark = self.spark
@@ -280,83 +302,57 @@ class TilePipeline:
                 extract_elements(changed_docs, self.origin)
                 .withColumn("tile_z12", _tile_z12_col())
                 .select("tile_z12")
-                .distinct()
             )
             covers.append(new_cover)
         if deleted_doc_ids is not None:
             d = deleted_doc_ids.select("doc_id").distinct()
             ids = d if ids is None else ids.unionByName(d).distinct()
-        if ids is not None:
-            try:
-                old = spark.read.parquet(os.path.join(self.out_dir, "tile_assignments"))
-                covers.append(
-                    old.join(ids, "doc_id", "left_semi").select("tile_z12").distinct()
-                )
-            except Exception:
-                pass  # nothing written yet -> nothing old to invalidate
-        if not covers:
-            return spark.createDataFrame([], "stage string, tile_z12 bigint")
-        affected = covers[0]
-        for c in covers[1:]:
-            affected = affected.unionByName(c)
-        # materialize to literals BEFORE any partition purge: the lazy plan
-        # reads the stage parquet, which the purge below deletes (the
-        # affected set is change-set-sized metadata, like a partition
-        # DELETE predicate)
-        aff_ids = sorted({r.tile_z12 for r in affected.distinct().collect()})
-        affected = spark.createDataFrame([(v,) for v in aff_ids], "tile_z12 bigint")
+        old = None if ids is None else _read_if_exists(spark, os.path.join(self.out_dir, "tile_assignments"))
+        if old is not None:
+            covers.append(old.join(ids, "doc_id", "left_semi").select("tile_z12"))
+        affected = set()
+        if covers:
+            # collect BEFORE any partition purge: the lazy plan reads the
+            # stage parquet, which the purge below deletes (the affected set
+            # is change-set-sized metadata, like a partition DELETE
+            # predicate)
+            union = reduce(DataFrame.unionByName, covers)
+            affected = {r.tile_z12 for r in union.distinct().collect()}
 
-        t = T.unpack_tile(F.col("tile_z12"))
-        neighborhood = affected.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(-1), F.lit(1)),
-                        lambda dx: F.transform(
-                            F.sequence(F.lit(-1), F.lit(1)),
-                            lambda dy: T.pack_tile(t["zoom"], t["x"] + dx, t["y"] + dy),
-                        ),
-                    )
-                )
-            ).alias("tile_z12")
-        ).distinct()
-
-        per_stage = {
-            "tile_assignments": affected,
-            "overlaps": neighborhood,
-        }
-        out = None
+        retracted = {"stage": [], "tile_z12": []}
         for stage in stages:
-            tiles = per_stage.get(stage, affected)
+            tiles = _neighborhood(affected) if stage == "overlaps" else affected
             # only retract tiles that are actually committed (idempotent)
-            tiles = tiles.join(self.committed_tiles(stage), "tile_z12", "left_semi")
-            rows = tiles.select(
-                F.lit(stage).alias("stage"),
-                F.col("tile_z12"),
-                F.lit("invalidated").alias("status"),
-                F.lit(run_ts).alias("ts"),
-            )
-            rows.write.mode("append").parquet(self._commits_path())
-            # eager partition purge (see docstring)
-            for r in tiles.collect():
-                shutil.rmtree(
-                    os.path.join(self.out_dir, stage, f"tile_z12={r['tile_z12']}"),
-                    ignore_errors=True,
-                )
-            sel = tiles.select(F.lit(stage).alias("stage"), "tile_z12")
-            out = sel if out is None else out.unionByName(sel)
-        return out if out is not None else spark.createDataFrame([], "stage string, tile_z12 bigint")
+            for t in sorted(tiles & self.committed_tiles(stage)):
+                retracted["stage"].append(stage)
+                retracted["tile_z12"].append(t)
+        out = _manifest_rows(spark, retracted)
+        if retracted["tile_z12"]:
+            # retraction first, purge second: a kill in between leaves the
+            # stale rows of an uncommitted tile, which the next run
+            # overwrites
+            self._append_commits(out, "invalidated", run_ts)
+        for stage, t in zip(retracted["stage"], retracted["tile_z12"]):
+            shutil.rmtree(os.path.join(self.out_dir, stage, f"tile_z12={t}"), ignore_errors=True)
+        return out
 
     # ------------------------------------------------------------ stages
 
-    def _run_stage(self, stage: str, df: DataFrame, run_ts: str) -> int:
-        """Write one stage partitioned by tile_z12, skipping committed
-        tiles; returns number of newly processed tiles. `df` must carry a
-        tile_z12 column."""
+    def _run_stage(self, stage: str, tiles: set[int], plan, run_ts: str, errors: int) -> int:
+        """Run `stage` over those of `tiles` it has not committed; return how
+        many it processed. With none left it does nothing: no plan, no
+        write, no manifest rows. Else `plan(todo)` builds the rows (carrying
+        tile_z12) of the sorted work list `todo`; once they are written,
+        every processed tile is committed, rows or not, and `_lineage` gets
+        one row per tile with rows, counted from this run's write."""
         t0 = time.monotonic()
-        committed = self.committed_tiles(stage, run_ts)
-        todo = df.join(committed, "tile_z12", "left_anti")
-        if "tile_x" in todo.columns and "tile_y" in todo.columns:
+        todo = sorted(tiles - self.committed_tiles(stage, run_ts))
+        if not todo:
+            return 0
+        # one writer task per tile where the tile is small (AQE coalesces
+        # the rebalance, and splits a skewed tile over several tasks)
+        out = plan(todo).hint("rebalance", "tile_z12")
+        if "tile_x" in out.columns and "tile_y" in out.columns:
             # Z-order locality: cluster each output file along the Morton
             # curve of the fine tile coordinates, so a tile-range read
             # skips row groups via parquet min/max stats instead of
@@ -364,29 +360,39 @@ class TilePipeline:
             # no exchange, just a per-task sort before the write.
             from ..functions.tiles import morton_key
 
-            todo = todo.sortWithinPartitions(
+            out = out.sortWithinPartitions(
                 "tile_z12", morton_key(F.col("tile_x"), F.col("tile_y"))
             )
-        # Stage data is recomputed per uncommitted tile; dynamic partition
-        # overwrite makes a retried tile idempotent.
-        path = os.path.join(self.out_dir, stage)
+        parts = ["tile_z12"]
         if self.scoped:
             # per-batch partitions: overwrite only touches this run's
             # (tile, run_ts) dirs, earlier batches' rows stay intact
-            todo = todo.withColumn("run_ts", F.lit(run_ts))
-            todo.write.mode("overwrite").partitionBy("tile_z12", "run_ts").parquet(path)
-            written = self.spark.read.parquet(path).where(F.col("run_ts") == run_ts)
-        else:
-            todo.write.mode("overwrite").partitionBy("tile_z12").parquet(path)
-            written = self.spark.read.parquet(path)
-        counts = written.join(
-            committed, "tile_z12", "left_anti"
-        ).groupBy("tile_z12").agg(F.count("*").alias("rows_out"))
-        n_new = counts.count()
+            out = out.withColumn("run_ts", F.lit(run_ts))
+            parts.append("run_ts")
+        # dynamic partition overwrite makes a retried tile idempotent; the
+        # persisted rows give the per-tile counts without reading the stage
+        # directory back
+        out = out.persist()
+        out.write.mode("overwrite").partitionBy(*parts).parquet(os.path.join(self.out_dir, stage))
+        counts = out.groupBy("tile_z12").count().collect()
+        out.unpersist()
         wall_ms = int((time.monotonic() - t0) * 1000)
-        self._lineage(stage, counts, wall_ms, run_ts, errors=getattr(self, "_stage_errors", 0))
-        self._commit(stage, counts.select("tile_z12"), run_ts)
-        return n_new
+        lineage = {
+            "stage": [stage] * len(counts),
+            "tile_z12": [r["tile_z12"] for r in counts],
+            "rows_out": [r["count"] for r in counts],
+        }
+        _manifest_rows(self.spark, lineage).select(
+            "stage",
+            "tile_z12",
+            "rows_out",
+            F.lit(errors).cast("bigint").alias("errors"),
+            F.lit(wall_ms).cast("bigint").alias("wall_ms"),
+            F.lit(run_ts).alias("run_ts"),
+        ).write.mode("append").parquet(os.path.join(self.out_dir, "_lineage"))
+        done = _manifest_rows(self.spark, {"stage": [stage] * len(todo), "tile_z12": todo})
+        self._append_commits(done, "done", run_ts)
+        return len(todo)
 
     def run(
         self,
@@ -402,12 +408,13 @@ class TilePipeline:
         Malformed geo spans are quarantined, not fatal
         (FaultTolerantIterationUtil.java:20-54): they are written to
         `_quarantine` with the run_ts and surface as real `errors` counts
-        in the lineage rows, while the valid spans proceed."""
+        in the lineage rows, while the valid spans proceed.
+
+        The report counts each stage's processed tiles, empty or not."""
         from ..sources.documents import geo_span_errors
 
         elements = extract_elements(docs, self.origin).withColumn("tile_z12", _tile_z12_col())
         elements = elements.persist()
-        report = {}
 
         errs = geo_span_errors(docs)
         n_errors = errs.count()
@@ -415,59 +422,51 @@ class TilePipeline:
             errs.withColumn("run_ts", F.lit(run_ts)).write.mode("append").parquet(
                 os.path.join(self.out_dir, "_quarantine")
             )
-        report["errors"] = n_errors
-        self._stage_errors = n_errors
+        report = {"errors": n_errors}
 
-        # compute-skip on resume: restrict inputs to uncommitted tiles (plus
-        # a 1-tile neighborhood for the cross-tile join stage) BEFORE the
-        # expensive operators run — the reference's filterTileNumbers
-        # anti-join, applied to the plan rather than the outputs.
-        ta_committed = self.committed_tiles("tile_assignments", run_ts)
-        ta_elements = elements.join(ta_committed, "tile_z12", "left_anti")
-        tiles_df = assign_tiles(ta_elements.drop("tile_z12"), with_cells=True).join(
-            elements.select("doc_id", "span_idx", "tile_z12"), ["doc_id", "span_idx"]
+        # compute-skip on resume: each stage restricts its inputs to its
+        # uncommitted tiles (plus a 1-tile neighborhood for the cross-tile
+        # join stage) BEFORE the expensive operators run — the reference's
+        # filterTileNumbers, applied to the plan rather than the outputs.
+        # Work lists are z12-tile-sized and held on the driver, like the
+        # reference's tile list.
+        tiles = {r.tile_z12 for r in elements.select("tile_z12").distinct().collect()}
+
+        def tile_plan(todo: list[int]) -> DataFrame:
+            els = elements.where(F.col("tile_z12").isin(todo))
+            return assign_tiles(els.drop("tile_z12"), with_cells=True).join(
+                els.select("doc_id", "span_idx", "tile_z12"), ["doc_id", "span_idx"]
+            )
+
+        report["tile_assignments"] = self._run_stage(
+            "tile_assignments", tiles, tile_plan, run_ts, n_errors
         )
-        report["tile_assignments"] = self._run_stage("tile_assignments", tiles_df, run_ts)
 
         if with_overlaps:
-            ov_committed = self.committed_tiles("overlaps", run_ts)
-            ov_elements = elements
-            at_sea = self._at_sea_tiles()
-            if at_sea is not None and not at_sea.isEmpty():
-                # per-tile config override: isAtSea tiles carry open water,
-                # element-overlap processing is skipped for them
-                ov_elements = ov_elements.join(
-                    F.broadcast(at_sea), "tile_z12", "left_anti"
+            # per-tile config override: isAtSea tiles carry open water,
+            # element-overlap processing is skipped for them on every run
+            md = self.tile_metadata
+            sea = set() if md is None else {r.tile_z12 for r in md.where(~F.col("land")).collect()}
+
+            def overlap_plan(todo: list[int]) -> DataFrame:
+                near = elements.where(F.col("tile_z12").isin(sorted(_neighborhood(todo) - sea)))
+                overlaps = spatial_self_join(near.drop("tile_z12"))
+                # overlap rows keyed by the z12 tile of element a's doc span
+                a_key = F.split(F.col("a_id"), "#")
+                return (
+                    overlaps.join(
+                        near.select(
+                            F.concat_ws("#", "doc_id", "span_idx").alias("a_prefix"), "tile_z12"
+                        ).dropDuplicates(["a_prefix"]),
+                        F.concat_ws("#", a_key[0], a_key[1]) == F.col("a_prefix"),
+                    )
+                    .drop("a_prefix")
+                    .where(F.col("tile_z12").isin(todo))
                 )
-            if not ov_committed.isEmpty():
-                uncommitted = (
-                    elements.select("tile_z12").distinct().join(ov_committed, "tile_z12", "left_anti")
-                )
-                t = T.unpack_tile(F.col("tile_z12"))
-                neighborhood = uncommitted.select(
-                    F.explode(
-                        F.flatten(
-                            F.transform(
-                                F.sequence(F.lit(-1), F.lit(1)),
-                                lambda dx: F.transform(
-                                    F.sequence(F.lit(-1), F.lit(1)),
-                                    lambda dy: T.pack_tile(t["zoom"], t["x"] + dx, t["y"] + dy),
-                                ),
-                            )
-                        )
-                    ).alias("tile_z12")
-                ).distinct()
-                ov_elements = elements.join(neighborhood, "tile_z12", "left_semi")
-            overlaps = spatial_self_join(ov_elements.drop("tile_z12"))
-            # overlap rows keyed by the z12 tile of element a's doc span
-            a_key = F.split(F.col("a_id"), "#")
-            keyed = overlaps.join(
-                elements.select(
-                    F.concat_ws("#", "doc_id", "span_idx").alias("a_prefix"), "tile_z12"
-                ).dropDuplicates(["a_prefix"]),
-                F.concat_ws("#", a_key[0], a_key[1]) == F.col("a_prefix"),
-            ).drop("a_prefix")
-            report["overlaps"] = self._run_stage("overlaps", keyed, run_ts)
+
+            report["overlaps"] = self._run_stage(
+                "overlaps", tiles - sea, overlap_plan, run_ts, n_errors
+            )
 
         if with_tileset:
             # S8 tileset layout sink: one JSON index doc per populated z12

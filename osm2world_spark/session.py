@@ -28,17 +28,17 @@ def _ensure_package_on_worker_path() -> None:
         os.environ["PYTHONPATH"] = os.pathsep.join([pkg_parent] + [p for p in parts if p])
 
 
-def _submitted_master() -> str | None:
-    """The master spark-submit was given, when this driver runs under it.
-    spark-submit starts the JVM first and hands Python its gateway
-    (PYSPARK_GATEWAY_PORT), so the master already sits in the JVM's conf,
-    where builder.master() would override it."""
+def _submitted_conf() -> dict[str, str]:
+    """The settings spark-submit was given (--master, --conf, ...), when
+    this driver runs under it. spark-submit starts the JVM first and hands
+    Python its gateway (PYSPARK_GATEWAY_PORT), so they already sit in the
+    JVM's conf, where builder.config() would override them."""
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        return None
+        return {}
     from pyspark import SparkConf, SparkContext
 
     SparkContext._ensure_initialized()
-    return SparkConf().get("spark.master", None)
+    return dict(SparkConf().getAll())
 
 
 def get_spark(
@@ -48,37 +48,39 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """The engine's session. `master=None` keeps the master spark-submit
-    was given, else runs local[$SPARK_GRAFT_CPUS or 32]."""
+    was given, else runs local[$SPARK_GRAFT_CPUS or 32]. The engine's
+    defaults below fill only the settings spark-submit was not given;
+    `shuffle_partitions` and `extra_conf` override both."""
     _ensure_package_on_worker_path()
-    # shuffle/spill on tmpfs when available: a slow shared disk becomes a
-    # serial bottleneck for shuffle-heavy stages; a real cluster uses
-    # local NVMe via spark.local.dir
-    local_dir = (extra_conf or {}).get("spark.local.dir") or (
-        "/dev/shm/spark-tmp" if os.path.isdir("/dev/shm") else "/tmp"
-    )
-    os.makedirs(local_dir, exist_ok=True)
+    submitted = _submitted_conf()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
-        master = _submitted_master() or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local[N] -> N; a real cluster wants 2-3x total cores instead.
-        n = master[len("local[") : -1] if master.startswith("local[") else ""
-        shuffle_partitions = cpus if n in ("", "*") else int(n)
+        master = submitted.get("spark.master") or f"local[{cpus}]"
+    # local[N] -> N; a real cluster wants 2-3x total cores instead.
+    n = master[len("local[") : -1] if master.startswith("local[") else ""
+    conf = {
+        "spark.sql.shuffle.partitions": str(cpus if n in ("", "*") else int(n)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        # shuffle/spill on tmpfs when available: a slow shared disk becomes
+        # a serial bottleneck for shuffle-heavy stages; a real cluster uses
+        # local NVMe via spark.local.dir
+        "spark.local.dir": "/dev/shm/spark-tmp" if os.path.isdir("/dev/shm") else "/tmp",
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+    }
+    conf = {k: v for k, v in conf.items() if k not in submitted}
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    if "spark.local.dir" in conf:
+        os.makedirs(conf["spark.local.dir"], exist_ok=True)
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.local.dir", local_dir)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -10,6 +10,7 @@ append; the resume must overwrite those partitions idempotently."""
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm2world_spark.plans.pipeline import TilePipeline
@@ -107,6 +108,60 @@ def test_per_tile_config_overrides(spark, tmp_path):
     ov = spark.read.parquet(os.path.join(out, "overlaps"))
     assert ov.where(F.col("tile_z12") == sea_tile).count() == 0
     assert ov.count() > 0
+    # a second run over the same corpus keeps the at-sea tile out too
+    p.run(docs, run_ts="run1", with_overlaps=True)
+    ov = spark.read.parquet(os.path.join(out, "overlaps"))
+    assert ov.where(F.col("tile_z12") == sea_tile).count() == 0
     # the scan stage still records the at-sea tile's assignments
     ta = spark.read.parquet(os.path.join(out, "tile_assignments"))
     assert ta.where(F.col("tile_z12") == sea_tile).count() > 0
+
+
+def _files(root):
+    return {
+        os.path.relpath(os.path.join(d, f), root) for d, _, fs in os.walk(root) for f in fs
+    }
+
+
+@pytest.mark.parametrize("lone_point", [False, True], ids=["synthetic", "with_empty_overlaps_tile"])
+def test_committed_resume_does_no_work(spark, tmp_path, lone_point):
+    """A resume with every tile committed plans, writes and appends
+    nothing. With `lone_point`, one tile holds a single point and so has no
+    overlap rows: it is committed all the same, without a lineage row."""
+    from osm2world_spark.sources.documents import DOCS_SCHEMA
+
+    docs = synthetic_documents(spark, 200, seed=3)
+    if lone_point:
+        lone = [("lone", [{"kind": "geo_point", "text": "48.70,13.70", "media_ref": "", "offset": 0}])]
+        docs = docs.unionByName(spark.createDataFrame(lone, DOCS_SCHEMA))
+    docs = docs.cache()
+    out = str(tmp_path / "out")
+    pipe = TilePipeline(spark, out)
+    fresh = pipe.run(docs, run_ts="fresh")
+    before = _files(out)
+
+    assert pipe.run(docs, run_ts="resume") == {"errors": 0, "tile_assignments": 0, "overlaps": 0}
+    assert _files(out) == before
+
+    committed = spark.read.parquet(os.path.join(out, "_commits")).where(F.col("stage") == "overlaps")
+    with_rows = spark.read.parquet(os.path.join(out, "overlaps")).select("tile_z12").distinct()
+    assert committed.count() == fresh["overlaps"]
+    lineage = spark.read.parquet(os.path.join(out, "_lineage")).where(F.col("stage") == "overlaps")
+    assert lineage.count() == with_rows.count()
+    if lone_point:
+        assert with_rows.count() < committed.count()
+    docs.unpersist()
+
+
+def test_manifest_read_errors_are_not_swallowed(spark, tmp_path):
+    """A manifest holding no data file yet (a first commit append killed
+    before publishing) reads as nothing committed; an unreadable one fails
+    the run instead of silently recomputing every tile."""
+    docs = synthetic_documents(spark, 60, seed=5)
+    out = tmp_path / "out"
+    os.makedirs(out / "_commits" / "_temporary" / "0")
+    assert TilePipeline(spark, str(out)).run(docs, with_overlaps=False)["tile_assignments"] > 0
+
+    (out / "_commits" / "part-00000-corrupt.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="parquet"):
+        TilePipeline(spark, str(out)).run(docs, with_overlaps=False)

@@ -1,4 +1,4 @@
-"""get_spark: the master spark-submit was given wins, and only the local
+"""get_spark: the settings spark-submit was given win, and only the local
 dir the session uses is created."""
 
 import os
@@ -23,18 +23,31 @@ def test_spark_submit_master_wins(tmp_path):
 
             s = get_spark(app_name="submit-master")
             print("MASTER", s.sparkContext.master, s.conf.get("spark.sql.shuffle.partitions"))
+            print("LOCAL_DIR", s.sparkContext.getConf().get("spark.local.dir"))
             s.stop()
             """
         )
     )
     env = dict(os.environ, SPARK_DRIVER_MEM="512m", SPARK_GRAFT_CPUS="3", PYSPARK_PYTHON=sys.executable)
-    out = subprocess.run(
-        [SPARK_SUBMIT, "--master", "local[1]", "--driver-memory", "512m", str(script)],
-        env=env, capture_output=True, text=True, timeout=300,
-    )
-    assert out.returncode == 0, out.stderr[-4000:]
-    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("MASTER ")]
-    assert lines == ["MASTER local[1] 1"], out.stdout
+
+    def submit(*args):
+        out = subprocess.run(
+            [SPARK_SUBMIT, "--master", "local[1]", "--driver-memory", "512m", *args, str(script)],
+            env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-4000:]
+        return out.stdout.splitlines()
+
+    lines = submit()
+    assert [ln for ln in lines if ln.startswith("MASTER ")] == ["MASTER local[1] 1"], lines
+
+    # every other submitted setting wins over the engine's defaults as well
+    local_dir = str(tmp_path / "submitted-local")
+    lines = submit("--conf", "spark.sql.shuffle.partitions=7", "--conf", f"spark.local.dir={local_dir}")
+    assert [ln for ln in lines if ln.startswith(("MASTER ", "LOCAL_DIR "))] == [
+        "MASTER local[1] 7",
+        f"LOCAL_DIR {local_dir}",
+    ], lines
 
 
 def test_local_dir_from_extra_conf_is_the_only_one_created(tmp_path, monkeypatch):

@@ -89,3 +89,18 @@ def test_tile_bounds_around():
     assert (0, 0) in r2 and (2, 2) in r2
     r3 = py_tiles_around([(1, 0, 0), (2, 1, 1)], 1)
     assert r3 == {(0, 0)}
+
+
+def test_packed_tile_twins_match_columns(spark):
+    """py_pack_tile / py_unpack_tile agree with the Column pack_tile /
+    unpack_tile the stages write, at the edges of the 29-bit fields."""
+    from pyspark.sql import functions as F
+
+    from osm2world_spark.functions.tiles import pack_tile, py_pack_tile, py_unpack_tile, unpack_tile
+
+    zxy = [(0, 0, 0), (12, 2200, 1414), (12, 4095, 0), (29, (1 << 29) - 1, (1 << 29) - 1)]
+    df = spark.createDataFrame(zxy, "zoom int, x int, y int")
+    packed = df.select(pack_tile(F.col("zoom"), F.col("x"), F.col("y")).alias("p"))
+    got = packed.select("p", unpack_tile(F.col("p")).alias("t")).collect()
+    assert [r.p for r in got] == [py_pack_tile(*t) for t in zxy]
+    assert [tuple(r.t) for r in got] == [py_unpack_tile(r.p) for r in got] == zxy
